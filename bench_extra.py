@@ -190,7 +190,7 @@ def _stages_kg_triples(spark, sf_dir, reps):
         ).dropDuplicates(["sha_key"])
         found = ner.detect_mentions(
             distinct, text_col="conclusion", catalog=pat.KEYWORD_PATTERNS,
-            threshold=0.5, id_cols=("sha_key",), partitions=None,
+            threshold=0.5, id_cols=("sha_key",),
         )
         force(found)
 

@@ -210,13 +210,6 @@ def sha256_hex(s: str | bytes) -> str:
     return hashlib.sha256(s).hexdigest()
 
 
-def mention_id(key: str, start: int, end: int, label: str) -> str:
-    """`key` must be the FULL document identity (e.g. repo\\x1fpath\\x1f
-    commit, or the content sha) — path alone collides across repos/
-    commits that share a path."""
-    return sha256_hex(f"{key}\x1f{start}\x1f{end}\x1f{label}")
-
-
 def stable_score(text: str, label: str) -> float:
     """Deterministic stand-in confidence in [0.5, 1.0), 3-dp rounded
     (reference rounds scores to 3dp, model_handler.py:34)."""

@@ -8,20 +8,18 @@ Its batch variant loops per text even inside "batches"
 micro-batch and one compiled catalog (or one loaded model) serves the
 whole Python worker, never reloaded per row.
 
-Scale design:
-- cost of detection is ~linear in text length → repartition by
-  (length-bucket, salt) so tasks are cost-balanced and no executor gets
-  all the 10k-char documents (SURVEY.md §2.10 item 1).
-- exact content dedup BEFORE detection (detect_mentions_deduped)
-  replaces the reference's 100-entry prediction cache
-  (model_handler.py:111-121) and removes the hot-key skew from
-  boilerplate/duplicated files: at 10^12 files, running the model once
-  per distinct sha instead of once per row is the dominant saving.
+Scale design: exact content dedup BEFORE detection (kg_pipeline.detect)
+replaces the reference's 100-entry prediction cache
+(model_handler.py:111-121) and removes the hot-key skew from
+boilerplate/duplicated files: at 10^12 files, running the model once
+per distinct sha instead of once per row is the dominant saving. The
+detectors here emit spans keyed by the caller's id columns only; the
+mention id is derived JVM-side by kg_pipeline.detect over the full
+document key.
 """
 
 from __future__ import annotations
 
-import json
 from collections.abc import Iterator
 
 import pandas as pd
@@ -32,21 +30,12 @@ from ..functions import patterns as pat
 from ..functions import textlib
 
 MENTION_FIELDS = (
-    "mention_id string, text string, label string, score double, "
-    "start_idx int, end_idx int"
+    "text string, label string, score double, start_idx int, end_idx int"
 )
 
 
 def _mention_schema(id_cols: tuple[str, ...]) -> str:
     return ", ".join([f"{c} string" for c in id_cols]) + ", " + MENTION_FIELDS
-
-
-def length_balanced(df: DataFrame, text_col: str, partitions: int) -> DataFrame:
-    """Repartition by (log2 length bucket, salt) so per-task detection
-    cost is balanced regardless of document-length skew."""
-    bucket = F.floor(F.log2(F.greatest(F.length(F.col(text_col)), F.lit(1)) + 1))
-    salt = F.pmod(F.xxhash64(F.col(text_col)), F.lit(partitions))
-    return df.repartition(partitions, bucket, salt)
 
 
 def detect_mentions(
@@ -55,24 +44,12 @@ def detect_mentions(
     catalog: dict[str, str] | None = None,
     threshold: float = 0.5,
     id_cols: tuple[str, ...] = ("repo", "path", "commit"),
-    partitions: int | None = None,
-    emit_mention_id: bool = True,
 ) -> DataFrame:
     """Run pattern-NER over `text_col`, returning exploded mention rows.
 
-    Output: id_cols + (mention_id, text, label, score, start_idx,
-    end_idx). Offsets are char offsets into `text_col`'s value, matching
-    EntityPrediction.start_idx/end_idx (model_handler.py:25-26).
-
-    emit_mention_id=False skips the per-mention sha256 + per-doc json
-    key serialization inside the Python worker and emits NULL
-    mention_id instead. Use it when the caller derives its own id from
-    the full document key afterwards (kg_pipeline.detect does, JVM-side
-    over DOC_COLS — the sha-keyed id computed here would be discarded):
-    Spark cannot prune a column out of an opaque mapInPandas, so the
-    only way not to pay for it is not to compute it. Measured: the id
-    machinery is ~1/3 of the worker body (1.21s -> 0.8s per 5k docs /
-    180k mentions single-threaded)."""
+    Output: id_cols + (text, label, score, start_idx, end_idx). Offsets
+    are char offsets into `text_col`'s value, matching
+    EntityPrediction.start_idx/end_idx (model_handler.py:25-26)."""
     catalog = catalog or pat.MEDICAL_PATTERNS
     schema = _mention_schema(id_cols)
 
@@ -81,8 +58,6 @@ def detect_mentions(
     pruned = docs.select(*id_cols, text_col).filter(
         F.col(text_col).isNotNull() & (F.trim(F.col(text_col)) != "")
     )
-    if partitions:
-        pruned = length_balanced(pruned, text_col, partitions)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         compiled = pat.compile_catalog(catalog)  # once per python worker task
@@ -92,23 +67,12 @@ def detect_mentions(
             # (a list-of-tuples -> DataFrame round trip is 2-3x slower
             # at millions of mentions)
             cols: dict[str, list] = {c: [] for c in id_cols}
-            mid, mtext, mlabel = [], [], []
+            mtext, mlabel = [], []
             mscore, mstart, mend = [], [], []
             ids = pdf[list(id_cols)].to_numpy()
             texts = pdf[text_col].to_numpy()
             for i in range(len(pdf)):
                 text = texts[i]
-                # mention_id covers the FULL document key — a path-only
-                # key collides across repos/commits sharing a path; JSON
-                # serialization keeps NULL ids distinct from the string
-                # "None" and field boundaries unambiguous
-                key = (
-                    json.dumps(
-                        [None if x is None else str(x) for x in ids[i]]
-                    )
-                    if emit_mention_id
-                    else None
-                )
                 for label, rx in compiled.items():
                     for m in rx.finditer(text):
                         surface = m.group(0)
@@ -121,11 +85,6 @@ def detect_mentions(
                             continue
                         for c, v in zip(cols, ids[i]):
                             cols[c].append(v)
-                        mid.append(
-                            textlib.mention_id(key, m.start(), m.end(), label)
-                            if emit_mention_id
-                            else None
-                        )
                         mtext.append(surface)
                         mlabel.append(label)
                         mscore.append(score)
@@ -134,7 +93,6 @@ def detect_mentions(
             yield pd.DataFrame(
                 {
                     **cols,
-                    "mention_id": mid,
                     "text": mtext,
                     "label": mlabel,
                     "score": mscore,
@@ -144,52 +102,6 @@ def detect_mentions(
             )
 
     return pruned.mapInPandas(run, schema=schema)
-
-
-def detect_mentions_deduped(
-    docs: DataFrame,
-    text_col: str = "conclusion",
-    catalog: dict[str, str] | None = None,
-    threshold: float = 0.5,
-    id_cols: tuple[str, ...] = ("repo", "path", "commit"),
-    partitions: int | None = None,
-) -> DataFrame:
-    """Exact-dedup-then-detect-then-rejoin: the scale path (M3).
-
-    Detection runs once per distinct content hash; results fan back out
-    to every (repo,path,commit) carrying that hash. Offsets/labels are
-    identical because detection is a pure function of the text.
-    """
-    hashed = docs.select(*id_cols, text_col).withColumn(
-        "_sha", F.sha2(F.col(text_col), 256)
-    )
-    distinct = hashed.select("_sha", text_col).dropDuplicates(["_sha"])
-    found = detect_mentions(
-        distinct.withColumnRenamed("_sha", "sha_key"),
-        text_col=text_col,
-        catalog=catalog,
-        threshold=threshold,
-        id_cols=("sha_key",),
-        partitions=partitions,
-    )
-    # fan results back out; mention_id re-keyed per document over the
-    # FULL id tuple (repo+path+commit) — a path-only key collides across
-    # repos/commits that share a path. The key is serialized with
-    # to_json (structural NULLs + field boundaries; concat_ws skips
-    # nulls and would collide rows differing only in WHICH id is null).
-    joined = hashed.select(*id_cols, "_sha").join(
-        found, hashed["_sha"] == found["sha_key"], "inner"
-    )
-    return joined.select(
-        *id_cols,
-        F.sha2(
-            F.to_json(
-                F.struct(*id_cols, "start_idx", "end_idx", "label")
-            ),
-            256,
-        ).alias("mention_id"),
-        "text", "label", "score", "start_idx", "end_idx",
-    )
 
 
 def gliner_detector(
@@ -259,7 +171,7 @@ def detect_mentions_gliner(
             ) from e
         model = GLiNER.from_pretrained(model_path)
         out_cols = list(id_cols) + [
-            "mention_id", "text", "label", "score", "start_idx", "end_idx",
+            "text", "label", "score", "start_idx", "end_idx",
         ]
         for pdf in batches:
             rows = []
@@ -272,13 +184,9 @@ def detect_mentions_gliner(
                     texts, list(labels), threshold=threshold
                 )
                 for (_, row), ents in zip(chunk.iterrows(), preds):
-                    key = json.dumps(
-                        [None if row[c] is None else str(row[c]) for c in id_cols]
-                    )
                     for e in ents:
                         rows.append(
                             (*[row[c] for c in id_cols],
-                             textlib.mention_id(key, e["start"], e["end"], e["label"]),
                              e["text"], e["label"], round(e["score"], 3),
                              e["start"], e["end"])
                         )

@@ -2,7 +2,7 @@
 shuffles handling the hot-key skew from boilerplate/duplicated files").
 
 The engine already kills skew implicitly in several places — the
-(length-bucket, salt) repartition before detection (ner.py:45-49), the
+dedup-by-content-sha clustering before detection (kg_pipeline.detect), the
 document-frequency caps before every LSH self-join (dedup.py,
 linking.py), AQE skew-join splitting (session.py). This module adds
 the EXPLICIT, reusable form for aggregations, where AQE cannot help:

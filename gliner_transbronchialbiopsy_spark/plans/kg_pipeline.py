@@ -90,10 +90,10 @@ def detect(
       hence the materialization barrier rather than a bare repartition.
     - docs_clustered=True skips that exchange entirely: the caller
       attests the input is already clustered by content_sha256 — e.g.
-      a bucketed stage table (sources.checkpoint.write_bucketed) or an
+      a sectionized snapshot written bucketed (run_pipeline
+      bucket_docs=N, i.e. CheckpointManager.write bucket_by) or an
       Iceberg bucket(n, content_sha256) layout — so the SCAN provides
-      the clustering and the doc table never shuffles at all (the
-      run_kg_job --bucketed-docs path).
+      the clustering and the doc table never shuffles at all.
     - the overlap-merge window shuffle runs ONLY when the detector can
       actually emit per-label overlaps (detector_overlaps=True, the
       GLiNER path). A single compiled regex's finditer output is
@@ -161,12 +161,6 @@ def detect(
             catalog=catalog or pat.MEDICAL_PATTERNS,
             threshold=threshold,
             id_cols=("sha_key",),
-            partitions=None,  # the sha repartition above already balanced
-            # the sha-keyed mention_id the worker would emit is
-            # discarded below (the output id is re-derived JVM-side
-            # over the FULL doc key) — don't pay Python sha256+json
-            # per mention for a dropped column
-            emit_mention_id=False,
         )
     # materialization barrier: downstream consumers (canonicalize's edge
     # + node subtrees, materialize_triples' probe side) reference this
@@ -186,7 +180,8 @@ def detect(
     fanned = hashed.select(*DOC_COLS, "content_sha256").join(
         merged, hashed["content_sha256"] == merged["sha_key"], "inner"
     )
-    # mention_id covers the full (repo, path, commit) key — a path-only
+    # the one place the mention id is derived (detectors emit none):
+    # it covers the full (repo, path, commit) key — a path-only
     # key would collide across repos/commits sharing a path — and the
     # key is serialized with to_json, which represents NULLs and field
     # boundaries structurally (concat_ws SKIPS null fields, so rows
@@ -331,39 +326,6 @@ def detector_variant(
     return f"catalog:{digest}@t={threshold}"
 
 
-def detect_checkpointed(
-    ckpt: "CheckpointManager",
-    spark: SparkSession,
-    sectionized: DataFrame,
-    *,
-    stage: str = "mentions",
-    variant: str | None = None,
-    force: bool = False,
-    **detect_kwargs,
-) -> DataFrame:
-    """get_or_compute the detection stage AND release detect()'s
-    internal clustered doc cache once the snapshot is materialized (or
-    reused). This is the one sanctioned way to checkpoint detection:
-    the release discipline lives here instead of being re-implemented
-    (or forgotten — a forgotten release pins a corpus-sized cache in
-    block storage) at every call site."""
-    captured: list[DataFrame] = []
-
-    def _compute() -> DataFrame:
-        df = detect(sectionized, **detect_kwargs)
-        captured.append(df)
-        return df
-
-    mentions = ckpt.get_or_compute(
-        spark, stage, _compute, force=force, variant=variant
-    )
-    # snapshot written (or reused): the clustered doc cache is dead
-    # weight in block storage from here on
-    for df in captured:
-        release_doc_cache(df)
-    return mentions
-
-
 def run_pipeline(
     spark: SparkSession,
     documents: DataFrame,
@@ -409,48 +371,46 @@ def run_pipeline(
         bucket_by=("content_sha256", bucket_docs) if bucket_docs else None,
     )
     docs_clustered = ckpt.bucket_spec("sectionized") is not None
-    if detect_shards:
-        captured: list[DataFrame] = []
+    captured: list[DataFrame] = []
 
-        def _shard(k: int) -> DataFrame:
-            # the previous shard's snapshot is committed by the time the
-            # next compute starts — release its doc cache NOW so at most
-            # one shard's clustered subset is pinned at a time (the
-            # whole point of sharding an hours-long stage)
-            while len(captured) > 0:
-                release_doc_cache(captured.pop())
-            subset = sectionized.filter(
-                F.pmod(F.xxhash64("content_sha256"), F.lit(detect_shards))
-                == k
-            )
-            # a filter preserves the scan's partitioning, so a bucketed
-            # sectionized snapshot keeps its zero-doc-side-shuffle
-            # guarantee per shard
-            df = detect(
-                subset, catalog=catalog, threshold=threshold,
-                partitions=None if docs_clustered else partitions,
-                detector=detector, docs_clustered=docs_clustered,
-            )
-            captured.append(df)
-            return df
-
-        try:
-            mentions = ckpt.get_or_compute_sharded(
-                spark, "mentions", _shard, detect_shards,
-                variant=det_variant, force=force,
-            )
-        finally:
-            # normal path: releases the last shard's cache; failure
-            # path: releases whatever shard was in flight
-            while len(captured) > 0:
-                release_doc_cache(captured.pop())
-    else:
-        mentions = detect_checkpointed(
-            ckpt, spark, sectionized, variant=det_variant, force=force,
-            catalog=catalog, threshold=threshold,
+    def _detect(subset: DataFrame) -> DataFrame:
+        # a previous shard's snapshot is committed by the time the next
+        # compute starts — release its doc cache NOW so at most one
+        # clustered subset is pinned at a time (the whole point of
+        # sharding an hours-long stage)
+        while captured:
+            release_doc_cache(captured.pop())
+        df = detect(
+            subset, catalog=catalog, threshold=threshold,
             partitions=None if docs_clustered else partitions,
             detector=detector, docs_clustered=docs_clustered,
         )
+        captured.append(df)
+        return df
+
+    try:
+        if detect_shards:
+            # a filter preserves the scan's partitioning, so a bucketed
+            # sectionized snapshot keeps its zero-doc-side-shuffle
+            # guarantee per shard
+            mentions = ckpt.get_or_compute_sharded(
+                spark, "mentions",
+                lambda k: _detect(sectionized.filter(
+                    F.pmod(F.xxhash64("content_sha256"), F.lit(detect_shards))
+                    == k
+                )),
+                detect_shards, variant=det_variant, force=force,
+            )
+        else:
+            mentions = ckpt.get_or_compute(
+                spark, "mentions", lambda: _detect(sectionized),
+                force=force, variant=det_variant,
+            )
+    finally:
+        # snapshot written (or reused) — or the stage failed: the
+        # clustered doc cache is dead weight in block storage either way
+        while captured:
+            release_doc_cache(captured.pop())
     cmap = ckpt.get_or_compute(
         spark, "entities", lambda: canonicalize(mentions), force=force,
         variant=det_variant,

@@ -25,81 +25,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
-def _warehouse_location(spark: SparkSession, table: str) -> Path | None:
-    """On-disk location a (possibly db-qualified) table maps to in a
-    LOCAL-filesystem warehouse, or None for hdfs://, s3a:// etc. —
-    where the parsed .path would name an unrelated local directory, so
-    rmtree there would either delete an innocent path or silently do
-    nothing; on those schemes the catalog/FS own the location (Iceberg
-    handles this natively). Explicit db qualifier wins, else the
-    session's CURRENT database; only the default db maps to the
-    warehouse root (others live under <db>.db/), comparisons
-    case-normalized like the catalog itself."""
-    from urllib.parse import unquote, urlparse
-
-    parts = table.split(".")
-    warehouse_uri = urlparse(spark.conf.get("spark.sql.warehouse.dir"))
-    if warehouse_uri.scheme not in ("", "file"):
-        return None
-    # unquote: the dir is a URI — %20 etc. must become real chars
-    warehouse = Path(unquote(warehouse_uri.path))
-    db = (
-        parts[0] if len(parts) == 2 else spark.catalog.currentDatabase()
-    ).lower()
-    name = parts[-1].lower()
-    return warehouse / name if db == "default" else warehouse / f"{db}.db" / name
-
-
-def _drop_table_and_location(spark: SparkSession, table: str) -> None:
-    """DROP TABLE IF EXISTS + remove its local-warehouse directory (the
-    in-memory catalog forgets tables on restart while their warehouse
-    directories persist — a stale location otherwise raises
-    LOCATION_ALREADY_EXISTS on the next write, or leaks a full-corpus
-    copy per staging table)."""
-    import shutil
-
-    quoted = ".".join(f"`{p}`" for p in table.split("."))
-    spark.sql(f"DROP TABLE IF EXISTS {quoted}")
-    loc = _warehouse_location(spark, table)
-    if loc is not None:
-        shutil.rmtree(loc, ignore_errors=True)
-
-
-def write_bucketed(
-    df: DataFrame, table: str, bucket_col: str, buckets: int, sort: bool = True
-) -> None:
-    """Bucketed (and sorted) parquet table via saveAsTable — the
-    co-located-join layout: two tables bucketed on the same key with
-    the same bucket count join with NO exchange on either side (the
-    scan itself satisfies the join's clustering), which removes the
-    remaining shuffle of the detect stage's fan-out join when the
-    documents table is stored bucketed by content sha. Bucket metadata
-    lives in the session catalog here; Iceberg's `bucket(n, col)`
-    partition transform is the production analogue of this layout.
-
-    Idempotent across sessions: the in-memory catalog forgets tables on
-    restart while their warehouse directories persist, so the stale
-    catalog entry AND location are dropped before the write
-    (_drop_table_and_location)."""
-    spark = df.sparkSession
-    _drop_table_and_location(spark, table)
-    writer = df.write.mode("overwrite").format("parquet").bucketBy(
-        buckets, bucket_col
-    )
-    if sort:
-        writer = writer.sortBy(bucket_col)
-    writer.saveAsTable(table)
-
-
-def drop_bucketed(spark: SparkSession, table: str) -> None:
-    """Drop a table written by write_bucketed AND remove its warehouse
-    directory. Run-scoped bucketed staging tables (e.g. run_kg_job's
-    kg_docs_bucketed_<sha12>) must not leak a full-corpus copy into the
-    shared warehouse per distinct workdir — call this once the consumer
-    stage's snapshot is materialized."""
-    _drop_table_and_location(spark, table)
-
-
 class CheckpointManager:
     def __init__(self, root: str | Path):
         self.root = Path(root)

@@ -5,9 +5,10 @@ incremental behaviors are skip-already-seen files (app.py:345) and the
 append-only corrections log (corrections_manager.py). Those map to:
 
 - `stream_documents`: readStream over a documents directory (new
-  parquet files = new upload batches); the same validate → detect DAG
-  runs per micro-batch via foreachBatch into an epoch-keyed idempotent
-  sink — effectively-once (foreachBatch alone is at-least-once).
+  parquet files = new upload batches); the batch path's validate →
+  kg_pipeline.detect DAG runs per micro-batch via foreachBatch into an
+  epoch-keyed idempotent sink — effectively-once (foreachBatch alone
+  is at-least-once).
 - `corrections_latest_state`: a streaming last-writer-wins over the
   corrections event log with a watermark, mirroring
   corrections_manager.latest_state (:85-97) as a live view.
@@ -73,7 +74,6 @@ def run_incremental_pipeline(
     fresh output_dir rather than a confusing read-side error later."""
     import os
 
-    from ..operators import ner
     from ..plans import kg_pipeline
 
     if os.path.isdir(output_dir):
@@ -99,18 +99,19 @@ def run_incremental_pipeline(
             "repo", "path", "commit", "lang", "content_sha256",
             F.col("content").alias("conclusion"),
         )
-        mentions = ner.detect_mentions_deduped(
-            sectionized, text_col="conclusion", catalog=catalog,
-            id_cols=("repo", "path", "commit"),
+        # detect() fans out on content_sha256, so two uploads sharing a
+        # (repo, path, commit) key each keep their own spans and sha;
+        # the epoch write below is the single consumer (no barrier)
+        mentions = kg_pipeline.detect(
+            sectionized, catalog=catalog, materialize=False
         )
-        joined = mentions.join(
-            sectionized.select("repo", "path", "commit", "content_sha256"),
-            ["repo", "path", "commit"],
-        )
-        # idempotent per-epoch sink: overwrite THIS epoch's directory only
-        joined.write.mode("overwrite").parquet(
-            f"{output_dir}/epoch={int(epoch_id)}"
-        )
+        try:
+            # idempotent per-epoch sink: overwrite THIS epoch's directory only
+            mentions.write.mode("overwrite").parquet(
+                f"{output_dir}/epoch={int(epoch_id)}"
+            )
+        finally:
+            kg_pipeline.release_doc_cache(mentions)
 
     return (
         stream.writeStream.foreachBatch(process_batch)

@@ -1,3 +1,4 @@
+import os
 import shutil
 import tempfile
 
@@ -8,6 +9,10 @@ from gliner_transbronchialbiopsy_spark.session import get_spark
 
 @pytest.fixture(scope="session")
 def spark():
+    # the session default heap (48g) lets one long test session's JVM
+    # outgrow the host's RAM; the toy-size tests need far less. Jobs
+    # the tests launch as subprocesses inherit the same cap.
+    os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "6g")
     s = get_spark(app_name="tests", cpus=8, shuffle_partitions=8)
     yield s
     s.stop()

@@ -323,7 +323,7 @@ def test_pluggable_model_detector_gets_overlap_merge(spark):
 
         schema = (
             ", ".join(f"{c} string" for c in id_cols)
-            + ", mention_id string, text string, label string, "
+            + ", text string, label string, "
             + "score double, start_idx int, end_idx int"
         )
 
@@ -333,13 +333,13 @@ def test_pluggable_model_detector_gets_overlap_merge(spark):
                 for row in pdf.itertuples(index=False):
                     key = getattr(row, id_cols[0])
                     # two overlapping same-label spans (IoU 8/12 > 0.5)
-                    out.append((key, "m1", "grade a zero", "Grade A", 0.60, 10, 22))
-                    out.append((key, "m2", "a zero", "Grade A", 0.95, 14, 22))
+                    out.append((key, "grade a zero", "Grade A", 0.60, 10, 22))
+                    out.append((key, "a zero", "Grade A", 0.95, 14, 22))
                     # plus a clean span of another label
-                    out.append((key, "m3", "LID", "Site", 0.80, 30, 33))
+                    out.append((key, "LID", "Site", 0.80, 30, 33))
                 yield pd.DataFrame(
                     out,
-                    columns=[*id_cols, "mention_id", "text", "label",
+                    columns=[*id_cols, "text", "label",
                              "score", "start_idx", "end_idx"],
                 )
 
@@ -375,18 +375,14 @@ def test_detector_variant_tracks_pattern_bodies():
 def test_mention_id_null_id_columns_distinct(spark):
     """Rows differing only in WHICH id column is NULL must get distinct
     mention_ids (concat_ws would skip the null and collide them)."""
-    from pyspark.sql import functions as F
-
-    from gliner_transbronchialbiopsy_spark.operators import ner
-
     docs = spark.createDataFrame(
         [("r", "p", None, "mot commun ici"), ("r", None, "p", "mot commun ici")],
         "repo string, path string, commit string, conclusion string",
     )
-    out = ner.detect_mentions_deduped(
-        docs, text_col="conclusion",
-        catalog={"W": r"\bcommun\b"}, id_cols=("repo", "path", "commit"),
+    sectionized = docs.withColumn(
+        "content_sha256", F.sha2(F.col("conclusion"), 256)
     )
+    out = kg_pipeline.detect(sectionized, catalog={"W": r"\bcommun\b"})
     ids = [r["mention_id"] for r in out.collect()]
     assert len(ids) == 2 and ids[0] != ids[1]
 

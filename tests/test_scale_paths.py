@@ -1,5 +1,5 @@
-"""Scale-path behaviors: hot-key dedup, length balancing, LSH bucket
-cap, GLiNER gating — the properties that matter at 100 TB, tested at
+"""Scale-path behaviors: hot-key dedup, LSH bucket cap, bucketed
+layouts, GLiNER gating — the properties that matter at 100 TB, tested at
 toy size."""
 
 import pandas as pd
@@ -48,19 +48,6 @@ def test_boilerplate_skew_detect_once_per_distinct(spark):
             (s["label"], s["start_idx"], s["end_idx"])
         )
     assert by_path["p0"] == by_path["p49"]
-
-
-def test_length_balanced_partitioning(spark):
-    docs = spark.createDataFrame(
-        [(f"p{i}", "x" * (10 + (i % 40) * 200) + str(i)) for i in range(200)],
-        "path string, conclusion string",
-    )
-    balanced = ner.length_balanced(docs, "conclusion", partitions=8)
-    assert balanced.rdd.getNumPartitions() == 8
-    sizes = balanced.rdd.glom().map(len).collect()
-    # distinct texts spread via the salt: no partition holds more than
-    # ~2x the mean (hash placement, not a perfect spread)
-    assert max(sizes) <= 2 * (200 // 8)
 
 
 def test_lsh_hot_bucket_cap_bounds_pairs(spark):
@@ -165,16 +152,19 @@ from gliner_transbronchialbiopsy_spark.sources.checkpoint import CheckpointManag
 
 spark = get_spark("fake_gliner", cpus=2, shuffle_partitions=2)
 labels = ("rejection grade", "biopsy site")
+# the biopsy section makes sectionize yield a conclusion, so the
+# pipeline run in 2) emits mentions too
 docs = spark.createDataFrame(
     [("r", f"p{i}", "c", "txt",
-      f"CONCLUSION : rejection noted, biopsy taken, sample {i}.")
+      "CONCLUSION : Biopsies transbronchiques : rejection noted, "
+      f"biopsy taken, sample {i}.")
      for i in range(5)],
     "repo string, path string, commit string, lang string, content string",
 )
 
 # 1) detector body: batching (batch_size=2 forces chunk iteration over
 #    5 rows), labeling, threshold pass-through (0.7 keeps only the
-#    0.95-score label), mention_id + score rounding
+#    0.95-score label), score rounding
 det = ner.gliner_detector("fake/model", labels=labels, threshold=0.7,
                           batch_size=2)
 rows = det(docs.withColumnRenamed("content", "conclusion"),
@@ -184,7 +174,6 @@ assert {r["label"] for r in rows} == {"rejection grade"}, rows
 assert all(r["score"] == 0.95 for r in rows)
 assert all(r["text"] == "rejection" for r in rows)
 assert all(r["end_idx"] - r["start_idx"] == len("rejection") for r in rows)
-assert len({r["mention_id"] for r in rows}) == 5  # id_cols in the id
 
 # 2) checkpoint-variant round-trip: the mentions snapshot must carry
 #    the detector's variant tag, and a DIFFERENT threshold must change
@@ -192,7 +181,10 @@ assert len({r["mention_id"] for r in rows}) == 5  # id_cols in the id
 assert det.variant == "gliner:fake/model:" + str(labels) + ":0.7"
 workdir = sys.argv[1]
 kg_pipeline.run_pipeline(spark, docs, workdir, detector=det)
-m = CheckpointManager(workdir).metrics("mentions")
+ckpt = CheckpointManager(workdir)
+ments = ckpt.read(spark, "mentions").collect()
+assert len({r["mention_id"] for r in ments}) == 5  # doc key in the id
+m = ckpt.metrics("mentions")
 # detector_variant() namespaces detector identities under "detector:"
 assert m["variant"] == "detector:" + det.variant, m
 det2 = ner.gliner_detector("fake/model", labels=labels, threshold=0.9)
@@ -327,12 +319,15 @@ def test_minhash_exact_verify_matches_true_jaccard(spark):
         assert j >= 0.6
 
 
-def test_bucketed_join_has_no_exchange(spark):
-    """Two tables bucketed on the same key with the same bucket count
-    join with ZERO Exchange operators — the co-located layout that
-    removes the fan-out join's shuffle when documents are stored
-    bucketed by content sha (Iceberg bucket(n, col) in production)."""
-    from gliner_transbronchialbiopsy_spark.sources import checkpoint as ckpt
+def test_bucketed_join_has_no_exchange(spark, tmp_path):
+    """Two stage snapshots bucketed on the same key with the same
+    bucket count join with ZERO Exchange operators — the co-located
+    layout that removes the fan-out join's shuffle when documents are
+    stored bucketed by content sha (Iceberg bucket(n, col) in
+    production)."""
+    from gliner_transbronchialbiopsy_spark.sources.checkpoint import (
+        CheckpointManager,
+    )
 
     docs = spark.createDataFrame(
         [(f"sha{i:03d}", f"doc{i}") for i in range(100)],
@@ -342,10 +337,11 @@ def test_bucketed_join_has_no_exchange(spark):
         [(f"sha{i % 50:03d}", f"m{i}", "Site") for i in range(200)],
         "sha string, text string, label string",
     )
-    ckpt.write_bucketed(docs, "t_docs_b", "sha", 4)
-    ckpt.write_bucketed(ments, "t_ments_b", "sha", 4)
-    a = spark.table("t_docs_b")
-    b = spark.table("t_ments_b")
+    ckpt = CheckpointManager(str(tmp_path))
+    ckpt.get_or_compute(spark, "docs_b", lambda: docs, bucket_by=("sha", 4))
+    ckpt.get_or_compute(spark, "ments_b", lambda: ments, bucket_by=("sha", 4))
+    a = ckpt.read(spark, "docs_b")
+    b = ckpt.read(spark, "ments_b")
     joined = a.hint("merge").join(b, "sha")
     plan = joined._jdf.queryExecution().executedPlan().toString()
     assert "SortMergeJoin" in plan
@@ -403,7 +399,7 @@ def test_embedding_planes_autoscale():
     assert 1_000_000 / 2**big <= 256
 
 
-def test_detect_doc_side_never_shuffles(spark):
+def test_detect_doc_side_never_shuffles(spark, tmp_path):
     """The detect stage's doc-table discipline: (a) default path — ONE
     clustering exchange (inside the persisted cache build) serves both
     the dedup and the fan-out probe, so the visible plan's only shuffle
@@ -411,7 +407,7 @@ def test_detect_doc_side_never_shuffles(spark):
     itself provides the clustering and the doc side has zero exchanges.
     Both produce identical mentions."""
     from gliner_transbronchialbiopsy_spark.sources.checkpoint import (
-        write_bucketed,
+        CheckpointManager,
     )
 
     rows = [
@@ -440,9 +436,12 @@ def test_detect_doc_side_never_shuffles(spark):
     m_default = kg_pipeline.detect(sect)
     assert visible_shuffles(m_default) <= 1  # mention side only
 
-    write_bucketed(sect, "t_detect_bucketed", "content_sha256", 4)
+    ckpt = CheckpointManager(str(tmp_path))
+    ckpt.get_or_compute(
+        spark, "sect_b", lambda: sect, bucket_by=("content_sha256", 4)
+    )
     m_bucketed = kg_pipeline.detect(
-        spark.table("t_detect_bucketed"), docs_clustered=True
+        ckpt.read(spark, "sect_b"), docs_clustered=True
     )
     plan_b = m_bucketed._jdf.queryExecution().executedPlan().toString()
     assert sum(
@@ -623,3 +622,42 @@ def test_emit_quads_job_flag(tmp_path):
     # hive layout: one directory per graph
     gs = {g for g, _, _, _ in rows}
     assert len(gs) >= 1 and all((out_dir / f"g={g}").is_dir() for g in gs)
+
+
+def test_run_kg_job_matches_in_process_pipeline(spark, tmp_path):
+    """The spark-submit job with its layout/resume knobs on
+    (--bucketed-docs, --detect-shards) prints the same triple count as
+    an in-process run_pipeline over the same input."""
+    import json
+    import os
+    import subprocess
+    import sys
+    from pathlib import Path
+
+    from gliner_transbronchialbiopsy_spark.sources import corpus
+
+    cdir = tmp_path / "corpus"
+    cdir.mkdir()
+    corpus.write_corpus(str(cdir), n_docs=120, seed=7)
+    docs_path = str(cdir / "documents.parquet")
+    # the job's JVM runs next to this session's: keep its heap small
+    env = {**os.environ, "SPARK_GRAFT_DRIVER_MEM": "1g"}
+    proc = subprocess.run(
+        [
+            sys.executable, "tools/run_kg_job.py",
+            "--input", docs_path,
+            "--workdir", str(tmp_path / "job"),
+            "--cpus", "2", "--fresh",
+            "--bucketed-docs", "4", "--detect-shards", "2",
+        ],
+        cwd=Path(__file__).resolve().parents[1], env=env,
+        capture_output=True, text=True, timeout=420,
+    )
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    line = [l for l in proc.stdout.splitlines() if l.startswith("{")][-1]
+    res = json.loads(line)
+
+    triples = kg_pipeline.run_pipeline(
+        spark, spark.read.parquet(docs_path), str(tmp_path / "inproc")
+    )
+    assert res["triples"] == triples.count() > 0

@@ -53,6 +53,46 @@ def test_incremental_pipeline_availableNow(spark, tmpdir_path):
         )
 
 
+def test_incremental_pipeline_same_key_uploads_keep_lineage(spark, tmpdir_path):
+    """Two uploads in one micro-batch share (repo, path, commit) but
+    carry different contents: each span must be emitted once, tagged
+    with the sha of the content it came from (a fan-out keyed on the
+    document key would cross the two and double the rows)."""
+    import hashlib
+
+    from gliner_transbronchialbiopsy_spark.functions import patterns as pat
+
+    contents = [
+        "CONCLUSION : Biopsies transbronchiques (LID) : 7 fragments. A0 B0.",
+        "CONCLUSION : Biopsies transbronchiques (LM) : 3 fragments. A2 B1.",
+    ]
+    in_dir = os.path.join(tmpdir_path, "in")
+    os.makedirs(in_dir)
+    pd.DataFrame(
+        {
+            "repo": ["r", "r"], "path": ["p", "p"], "commit": ["c", "c"],
+            "lang": ["txt", "txt"], "content": contents,
+        }
+    ).to_parquet(os.path.join(in_dir, "upload.parquet"), index=False)
+    out_dir = os.path.join(tmpdir_path, "out")
+    q = stream.run_incremental_pipeline(
+        spark, in_dir, out_dir, os.path.join(tmpdir_path, "ckpt"),
+        catalog=pat.MEDICAL_PATTERNS,
+    )
+    assert q.awaitTermination(240), "stream did not terminate in 240s"
+
+    by_sha = {hashlib.sha256(c.encode()).hexdigest(): c for c in contents}
+    rows = spark.read.parquet(out_dir).collect()
+    assert len(rows) == 8
+    for r in rows:
+        assert r["content_sha256"] in by_sha
+        src = by_sha[r["content_sha256"]]
+        assert src[r["start_idx"]:r["end_idx"]] == r["text"], r
+    assert {r["text"] for r in rows} == {
+        "LID", "7", "A0", "B0", "LM", "3", "A2", "B1",
+    }
+
+
 def test_corrections_streaming_window(spark, tmpdir_path):
     rows = pd.DataFrame(
         {

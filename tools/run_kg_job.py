@@ -39,23 +39,13 @@ def main() -> None:
         "content sha (stage-PARTITION resume: a killed run resumes at "
         "the first incomplete shard; mentions byte-identical for any K)",
     )
-    ap.add_argument("--skip-sectionize", action="store_true",
-                    help="treat content as already-sectionized text")
     ap.add_argument(
         "--bucketed-docs", type=int, default=0, metavar="N",
-        help="lay the document text out as an N-bucket table bucketed "
-        "by content_sha256 before detection. The scan then provides "
-        "the clustering the detect stage needs, so the document table "
-        "never shuffles: not for the dedup, not for the fan-out join "
-        "(only the mention side moves). With --skip-sectionize this "
-        "stages the input through a run-scoped warehouse table "
-        "(dropped after the mentions snapshot lands); without it, the "
-        "SECTIONIZED STAGE SNAPSHOT ITSELF is written bucketed, so the "
-        "first run and every resume inherit the layout for free. This "
-        "is the local analogue of an Iceberg "
-        "bucket(N, content_sha256) partition transform on the corpus "
-        "table — at 100 TB the layout is written once and every "
-        "detection run after that is shuffle-free on the doc side.",
+        help="write the sectionized stage snapshot as an N-bucket table "
+        "bucketed by content_sha256, so the detect stage's document "
+        "side never shuffles (not for the dedup, not for the fan-out "
+        "join) on the first run and on every resume; the local "
+        "analogue of an Iceberg bucket(N, content_sha256) transform",
     )
     ap.add_argument(
         "--emit-ntriples", metavar="DIR",
@@ -147,118 +137,12 @@ def main() -> None:
         )
 
     t0 = time.time()
-    if args.skip_sectionize:
-        validated = kg_pipeline.validate_documents(docs)
-        sectionized = validated.select(
-            "repo", "path", "commit", "lang", "content_sha256",
-            F.col("content").alias("conclusion"),
-        )
-        from gliner_transbronchialbiopsy_spark.sources.checkpoint import (
-            CheckpointManager,
-            write_bucketed,
-        )
-
-        ckpt = CheckpointManager(args.workdir)
-        from gliner_transbronchialbiopsy_spark import config as _cfg
-
-        variant = kg_pipeline.detector_variant(
-            catalog, _cfg.DEFAULT_CONFIDENCE_THRESHOLD, detector
-        )
-
-        def _mentions_snapshot_reusable() -> bool:
-            if not ckpt.exists("mentions"):
-                return False
-            m = ckpt.metrics_or_none("mentions") or {}
-            return m.get("variant") == variant
-
-        docs_clustered = False
-        # the bucketed layout exists only to feed detection — on a
-        # resume whose mentions snapshot is already complete, skip the
-        # (full-corpus) bucket write instead of paying it per run
-        if args.bucketed_docs and not _mentions_snapshot_reusable():
-            import hashlib
-
-            # run-scoped table name: a fixed global name would let two
-            # concurrent jobs sharing a warehouse overwrite each
-            # other's input mid-run (DROP + overwrite under a lazy
-            # reader of the same table)
-            tbl = (
-                "kg_docs_bucketed_"
-                + hashlib.sha256(args.workdir.encode()).hexdigest()[:12]
-            )
-            write_bucketed(
-                sectionized, tbl, "content_sha256", args.bucketed_docs,
-            )
-            sectionized = spark.table(tbl)
-            docs_clustered = True
-
-        if args.detect_shards:
-            # stage-partition resume for the skip-sectionize path too:
-            # same shard-by-content-sha contract as run_pipeline (a
-            # filter preserves the bucketed scan's clustering, so
-            # docs_clustered carries through per shard)
-            captured = []
-
-            def _shard(k):
-                while captured:
-                    kg_pipeline.release_doc_cache(captured.pop())
-                subset = sectionized.filter(
-                    F.pmod(
-                        F.xxhash64("content_sha256"),
-                        F.lit(args.detect_shards),
-                    )
-                    == k
-                )
-                df = kg_pipeline.detect(
-                    subset, catalog=catalog,
-                    partitions=None if docs_clustered else args.cpus * 2,
-                    detector=detector, docs_clustered=docs_clustered,
-                )
-                captured.append(df)
-                return df
-
-            try:
-                mentions = ckpt.get_or_compute_sharded(
-                    spark, "mentions", _shard, args.detect_shards,
-                    variant=variant,
-                )
-            finally:
-                while captured:
-                    kg_pipeline.release_doc_cache(captured.pop())
-        else:
-            mentions = kg_pipeline.detect_checkpointed(
-                ckpt, spark, sectionized, variant=variant,
-                catalog=catalog,
-                partitions=None if docs_clustered else args.cpus * 2,
-                detector=detector, docs_clustered=docs_clustered,
-            )
-        if docs_clustered:
-            # the bucketed layout existed only to feed detection; the
-            # mentions snapshot is written, so drop the staging table —
-            # otherwise every distinct workdir leaks a full-corpus copy
-            # into the shared warehouse
-            from gliner_transbronchialbiopsy_spark.sources.checkpoint import (
-                drop_bucketed,
-            )
-
-            drop_bucketed(spark, tbl)
-        cmap = ckpt.get_or_compute(
-            spark, "entities", lambda: kg_pipeline.canonicalize(mentions),
-            variant=variant,
-        )
-        triples = ckpt.get_or_compute(
-            spark, "triples",
-            lambda: kg_pipeline.materialize_triples(mentions, cmap),
-            partition_by=("pred",), lineage_key="pred",
-            variant=variant,
-        )
-    else:
-        triples = kg_pipeline.run_pipeline(
-            spark, docs, args.workdir, catalog=catalog,
-            partitions=args.cpus * 2, detector=detector,
-            bucket_docs=args.bucketed_docs,
-            detect_shards=args.detect_shards,
-        )
+    triples = kg_pipeline.run_pipeline(
+        spark, docs, args.workdir, catalog=catalog,
+        partitions=args.cpus * 2, detector=detector,
+        bucket_docs=args.bucketed_docs,
+        detect_shards=args.detect_shards,
+    )
     # the snapshot write already counted the rows for _metrics.json —
     # a triples.count() here would re-scan the 7M-row parquet snapshot
     # as pure serial driver time (measured ~5-15s at the 1.12M-doc
